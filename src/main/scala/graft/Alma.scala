@@ -6,9 +6,9 @@ import java.util.UUID
 import java.security.MessageDigest
 
 import graft.functions.{HashEmbedder, VectorFunctions}
-import graft.retrieval.{ModeConfig, Modes, PostProcess, QuerySanitizer, RetrievalCache}
+import graft.retrieval.{ModeConfig, Modes, PostProcess, QuerySanitizer, RetrievalCache, Score}
 import graft.storage._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The user-facing engine facade — the reference's `ALMA` core API
@@ -505,119 +505,13 @@ final class Alma(
       case Some(hit) => return hit
       case None =>
     }
-    val q = HashEmbedder.embed(QuerySanitizer.sanitize(query), embedDim)
-    val agents = scope(agent).readableAgents
-    val asOfUs = asOf.getTime * 1000L
-    // R10/J4: the (small) per-memory feedback summary, broadcast-joined
-    // into every type's scoring plan when signals exist. Feedback-less
-    // rows keep their raw score (feedback.py:190-230).
-    val fbSummary: Option[DataFrame] =
-      if (store.exists(MemoryType.Feedback)) Some(store.feedbackSummary(Some(projectId)))
-      else None
-
-    def scoreAndTake(df: DataFrame, recencyCol: String,
-        succ: org.apache.spark.sql.Column, conf: org.apache.spark.sql.Column,
-        failureFlag: Option[org.apache.spark.sql.Column] = None): DataFrame = {
-      val sim = VectorFunctions.cosineConst(col("embedding"), q)
-      val days = (lit(asOfUs) - unix_micros(col(recencyCol))).cast("double") / lit(86400000000.0)
-      val rec = pow(lit(0.5), days / lit(30.0))
-      val base = lit(m.wSim) * sim + lit(m.wRecency) * rec +
-        lit(m.wSuccess) * succ + lit(m.wConfidence) * conf
-      // R8 diagnostic failure boost / R9 exact-match boost ladder.
-      val failB = failureFlag match {
-        case Some(f) if m.failureBoost != 1.0 =>
-          when(f, lit(m.failureBoost)).otherwise(lit(1.0))
-        case _ => lit(1.0)
-      }
-      val exactB =
-        if (m.exactMatchBoost == 1.0) lit(1.0)
-        else when(sim > 0.9, lit(m.exactMatchBoost))
-          .when(sim > 0.8, lit(1.0 + (m.exactMatchBoost - 1.0) / 2.0))
-          .otherwise(lit(1.0))
-      val raw = df
-        .withColumn("_sim", sim)
-        .withColumn("_base_score", base)
-      // Feedback blends into the BASE score (reference order:
-      // engine.py:328 applies feedback to scorer output; the boost path
-      // :561-571 multiplies afterwards). Blending after boosts would
-      // let a boosted raw > 1 row LOSE score to perfect feedback, since
-      // the feedback term is capped at 1.
-      val blended = fbSummary match {
-        case Some(fb) =>
-          raw.join(broadcast(fb), col("id") === col("memoryId"), "left")
-            .withColumn("_fb_score",
-              when(col("feedback_score").isNotNull,
-                lit(1.0 - Alma.FeedbackWeight) * col("_base_score") +
-                  lit(Alma.FeedbackWeight) * (col("feedback_score") + lit(1.0)) / lit(2.0))
-                .otherwise(col("_base_score")))
-            .drop("memoryId", "feedback_score")
-        case None => raw.withColumn("_fb_score", col("_base_score"))
-      }
-      val boosted = blended.withColumn("_score", col("_fb_score") * failB * exactB)
-      boosted
-        .drop("_base_score", "_fb_score")
-        .filter(col("_score") >= m.minScore)
-        .orderBy(col("_score").desc, col("id"))
-        // Diversity modes over-fetch 3×k candidates for the driver-side
-        // greedy MMR (R7, applied after the single collect below);
-        // plain modes cap at k. Either way the per-type plan ends in a
-        // TakeOrderedAndProject — bounded output at any corpus size.
-        .limit(if (m.diversity <= 0.0) k else 3 * k)
-    }
+    val collected = fusedPlan(query, agent, asOf, k, m, wfFilter).collect().toSeq
 
     // R13 provenance: memories read from an inherited agent are tagged
     // with their origin (engine.py:804-827 metadata.shared_from) — on
     // every memory type.
     def tagShared(meta: Map[String, String], owner: String): Map[String, String] =
       if (owner != agent) meta + ("shared_from" -> owner) else meta
-
-    // The five per-type top-k plans union into ONE Spark job (SURVEY
-    // §1.4 MemorySlice alternative): each branch wraps its typed row in
-    // a discriminated envelope carrying (_score, _sim); a single
-    // collect brings back ≤ 5×3k bounded rows, and the driver splits,
-    // re-sorts per type, and applies MMR where the mode asks for it.
-    def fused[T](src: DataFrame, capped: DataFrame, wrap: (T, Double, Double) => Alma.Fused)(
-        implicit enc: org.apache.spark.sql.Encoder[(T, Double, Double)]): org.apache.spark.sql.Dataset[Alma.Fused] =
-      capped.select(struct(src.columns.toIndexedSeq.map(col): _*).as("_1"),
-          col("_score").as("_2"), col("_sim").as("_3"))
-        .as[(T, Double, Double)]
-        .map { case (t, s, si) => wrap(t, s, si) }
-
-    // Workflow scope: each set coordinate must match when the row is
-    // tagged with it; a missing metadata key passes (getItem → null →
-    // coalesce true). Applied at the scan, before scoring.
-    def scoped(df: DataFrame): DataFrame =
-      wfFilter.foldLeft(df) { case (d, (key, value)) =>
-        d.filter(coalesce(col("metadata").getItem(key) === lit(value), lit(true)))
-      }
-    val hdf = scoped(store.heuristics(Some(projectId), agents).toDF())
-    val odf = scoped(store.outcomes(Some(projectId), agents).toDF())
-    val kdf = scoped(store.knowledge(Some(projectId), agents).toDF())
-    val adf = scoped(store.antiPatterns(Some(projectId), agents).toDF())
-    val branches = Seq(
-      fused[Heuristic](hdf, scoreAndTake(hdf, "lastValidated",
-          succ = col("successCount").cast("double") /
-            when(col("occurrenceCount") === 0, 1L).otherwise(col("occurrenceCount")),
-          conf = col("confidence")),
-        (h, s, si) => Alma.Fused(MemoryType.Heuristics, h = Some(h), score = s, sim = si)),
-      fused[Outcome](odf, scoreAndTake(odf, "timestamp",
-          succ = when(col("success"), 1.0).otherwise(0.3),
-          conf = lit(1.0),
-          failureFlag = Some(!col("success"))),
-        (o, s, si) => Alma.Fused(MemoryType.Outcomes, o = Some(o), score = s, sim = si)),
-      fused[DomainKnowledge](kdf, scoreAndTake(kdf, "lastVerified",
-          succ = lit(1.0), conf = col("confidence")),
-        (dk, s, si) => Alma.Fused(MemoryType.Knowledge, dk = Some(dk), score = s, sim = si))) ++
-      (if (m.includeAntiPatterns)
-        Seq(fused[AntiPattern](adf, scoreAndTake(adf, "lastSeen",
-            succ = least(col("occurrenceCount").cast("double") / lit(10.0), lit(1.0)),
-            conf = lit(1.0)),
-          (ap, s, si) => Alma.Fused(MemoryType.AntiPatterns, ap = Some(ap), score = s, sim = si)))
-      else Nil) :+
-      // Preferences are unscored (engine.py:347-350).
-      store.preferences().orderBy(col("id")).limit(k)
-        .as[UserPreference].map(p => Alma.Fused(MemoryType.Preferences, up = Some(p)))
-    val collected = branches.reduce(_ union _).collect().toSeq
 
     // Driver-side per-type finish over the bounded envelope rows:
     // deterministic (score desc, id) order, then greedy MMR (R7) when
@@ -655,11 +549,117 @@ final class Alma(
     slice
   }
 
+  /** `retrieve`'s fused plan: one bounded top-k branch per memory type,
+    * each row carrying its final score and similarity (`m` normalized).
+    */
+  private[graft] def fusedPlan(query: String, agent: String, asOf: Timestamp, k: Int,
+      m: ModeConfig, wfFilter: Map[String, String]): Dataset[Alma.Fused] = {
+    val q = HashEmbedder.embed(QuerySanitizer.sanitize(query), embedDim)
+    val agents = scope(agent).readableAgents
+    val asOfUs = asOf.getTime * 1000L
+    // R10/J4: the (small) per-memory feedback summary, broadcast-joined
+    // into every type's scoring plan when signals exist. Feedback-less
+    // rows keep their raw score (feedback.py:190-230).
+    val fbSummary: Option[DataFrame] =
+      if (store.exists(MemoryType.Feedback)) Some(store.feedbackSummary(Some(projectId)))
+      else None
+
+    def scoreAndTake(df: DataFrame, rule: Score.TypeRule): DataFrame = {
+      val sim = VectorFunctions.cosineConst(col("embedding"), q)
+      val base = Score.composite(m.weights, sim,
+        Score.recency(col(rule.recencyCol), lit(asOfUs)), rule.success, rule.confidence)
+      // R8 diagnostic failure boost / R9 exact-match boost ladder.
+      val failB = rule.failed match {
+        case Some(f) if m.failureBoost != 1.0 =>
+          when(f, lit(m.failureBoost)).otherwise(lit(1.0))
+        case _ => lit(1.0)
+      }
+      val exactB =
+        if (m.exactMatchBoost == 1.0) lit(1.0)
+        else when(sim > 0.9, lit(m.exactMatchBoost))
+          .when(sim > 0.8, lit(1.0 + (m.exactMatchBoost - 1.0) / 2.0))
+          .otherwise(lit(1.0))
+      val raw = df
+        .withColumn("_sim", sim)
+        .withColumn("_base_score", base)
+      // Feedback blends into the BASE score (reference order:
+      // engine.py:328 applies feedback to scorer output; the boost path
+      // :561-571 multiplies afterwards). Blending after boosts would
+      // let a boosted raw > 1 row LOSE score to perfect feedback, since
+      // the feedback term is capped at 1.
+      val blended = fbSummary match {
+        case Some(fb) =>
+          raw.join(broadcast(fb), col("id") === col("memoryId"), "left")
+            .withColumn("_fb_score",
+              when(col("feedback_score").isNotNull,
+                Score.feedbackBlend(col("_base_score"), col("feedback_score")))
+                .otherwise(col("_base_score")))
+            .drop("memoryId", "feedback_score")
+        case None => raw.withColumn("_fb_score", col("_base_score"))
+      }
+      val boosted = blended.withColumn("_score", col("_fb_score") * failB * exactB)
+      boosted
+        .drop("_base_score", "_fb_score")
+        .filter(col("_score") >= m.minScore)
+        .orderBy(col("_score").desc, col("id"))
+        // Diversity modes over-fetch 3×k candidates for the driver-side
+        // greedy MMR (R7, applied after retrieveImpl's single collect);
+        // plain modes cap at k. Either way the per-type plan ends in a
+        // TakeOrderedAndProject — bounded output at any corpus size.
+        .limit(if (m.diversity <= 0.0) k else 3 * k)
+    }
+
+    // The five per-type top-k plans union into ONE Spark job (SURVEY
+    // §1.4 MemorySlice alternative): each branch wraps its typed row in
+    // a discriminated envelope carrying (_score, _sim); a single
+    // collect brings back ≤ 5×3k bounded rows, and the driver splits,
+    // re-sorts per type, and applies MMR where the mode asks for it.
+    def branch[T](rule: Score.TypeRule, wrap: (T, Double, Double) => Alma.Fused)(
+        implicit enc: Encoder[(T, Double, Double)]): Dataset[Alma.Fused] = {
+      // Workflow scope: each set coordinate must match when the row is
+      // tagged with it; a missing metadata key passes (getItem → null →
+      // coalesce true). Applied at the scan, before scoring.
+      val df = wfFilter.foldLeft(store.scan(rule.memoryType, Some(projectId), agents)) {
+        case (d, (key, value)) =>
+          d.filter(coalesce(col("metadata").getItem(key) === lit(value), lit(true)))
+      }
+      scoreAndTake(df, rule).select(struct(df.columns.toIndexedSeq.map(col): _*).as("_1"),
+          col("_score").as("_2"), col("_sim").as("_3"))
+        .as[(T, Double, Double)]
+        .map { case (t, s, si) => wrap(t, s, si) }
+    }
+    val branches = Seq(
+      branch[Heuristic](Score.Heuristics,
+        (h, s, si) => Alma.Fused(MemoryType.Heuristics, h = Some(h), score = s, sim = si)),
+      branch[Outcome](Score.Outcomes,
+        (o, s, si) => Alma.Fused(MemoryType.Outcomes, o = Some(o), score = s, sim = si)),
+      branch[DomainKnowledge](Score.Knowledge,
+        (dk, s, si) => Alma.Fused(MemoryType.Knowledge, dk = Some(dk), score = s, sim = si))) ++
+      (if (m.includeAntiPatterns)
+        Seq(branch[AntiPattern](Score.AntiPatterns,
+          (ap, s, si) => Alma.Fused(MemoryType.AntiPatterns, ap = Some(ap), score = s, sim = si)))
+      else Nil) :+
+      // Preferences are unscored (engine.py:347-350).
+      store.preferences().orderBy(col("id")).limit(k)
+        .as[UserPreference].map(p => Alma.Fused(MemoryType.Preferences, up = Some(p)))
+    branches.reduce(_ union _)
+  }
+
   /** Batch retrieval: many queries against every scored memory type in
     * ONE pass — the benchmark-runner shape (SURVEY §3.3: broadcast the
     * query vectors, scan each memory table once, Window top-k per
     * (query, type)). Returns (query_id, query, memory_type, rank, id,
     * score); N queries cost one job per type, not N.
+    *
+    * Scores come from the same [[Score]] rules and composite as
+    * `retrieve`, so in a mode without boosts or diversity the per-type
+    * ranking matches `retrieve`'s. What `retrieve` does and this path
+    * deliberately does not:
+    *  - no feedback blend (recorded signals are ignored);
+    *  - no diagnostic failure boost and no exact-match boost;
+    *  - no workflow scope filter;
+    *  - no MMR diversity re-rank;
+    *  - no preferences (they are unscored).
     */
   def retrieveBatch(
       queries: Seq[String],
@@ -676,33 +676,15 @@ final class Alma(
       (i.toLong, q, HashEmbedder.embed(QuerySanitizer.sanitize(q), embedDim))
     }.toDF("query_id", "query", "q_vec")
 
-    def normalized(df: DataFrame, memoryType: String, recencyCol: String,
-        succ: org.apache.spark.sql.Column, conf: org.apache.spark.sql.Column): DataFrame =
-      df.select(col("id"), lit(memoryType).as("memory_type"),
-        col("embedding"), col(recencyCol).as("_ts"),
-        succ.as("_succ"), conf.as("_conf"))
+    val candidates = Score.Rules.map { r =>
+      store.scan(r.memoryType, Some(projectId), agents).select(col("id"),
+        lit(r.memoryType).as("memory_type"), col("embedding"), col(r.recencyCol).as("_ts"),
+        r.success.as("_succ"), r.confidence.as("_conf"))
+    }.reduce(_ unionByName _)
 
-    val candidates = Seq(
-      normalized(store.heuristics(Some(projectId), agents).toDF(),
-        MemoryType.Heuristics, "lastValidated",
-        col("successCount").cast("double") /
-          when(col("occurrenceCount") === 0, 1L).otherwise(col("occurrenceCount")),
-        col("confidence")),
-      normalized(store.outcomes(Some(projectId), agents).toDF(),
-        MemoryType.Outcomes, "timestamp",
-        when(col("success"), 1.0).otherwise(0.3), lit(1.0)),
-      normalized(store.knowledge(Some(projectId), agents).toDF(),
-        MemoryType.Knowledge, "lastVerified", lit(1.0), col("confidence")),
-      normalized(store.antiPatterns(Some(projectId), agents).toDF(),
-        MemoryType.AntiPatterns, "lastSeen",
-        least(col("occurrenceCount").cast("double") / lit(10.0), lit(1.0)), lit(1.0))
-    ).reduce(_ unionByName _)
-
-    val sim = VectorFunctions.cosine(col("embedding"), col("q_vec"))
-    val days = (lit(asOfUs) - unix_micros(col("_ts"))).cast("double") / lit(86400000000.0)
-    val rec = pow(lit(0.5), days / lit(30.0))
-    val score = lit(m.wSim) * sim + lit(m.wRecency) * rec +
-      lit(m.wSuccess) * col("_succ") + lit(m.wConfidence) * col("_conf")
+    val score = Score.composite(m.weights,
+      VectorFunctions.cosine(col("embedding"), col("q_vec")),
+      Score.recency(col("_ts"), lit(asOfUs)), col("_succ"), col("_conf"))
     val w = Window.partitionBy("query_id", "memory_type")
       .orderBy(col("_score").desc, col("id"))
     candidates.crossJoin(broadcast(qdf))

@@ -59,13 +59,7 @@ object FlbRunner {
     val weights = if (args.length > 3) args(3).split(',').map(_.toDouble).toSeq
       else Seq(0.05, 0.15, 0.30)
     val seed = 42
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(defaultCpus = "8")
     val (provider: EmbeddingProvider, providerName) =
       sys.props.get("provider").orElse(sys.env.get("SPARK_GRAFT_PROVIDER")) match {
         case Some("w2v") =>
@@ -166,8 +160,7 @@ object FlbRunner {
             // items with no feedback keep their raw sim — the
             // reference blends ONLY summarized items (feedback.py:205)
             when(col("fb_total").isNull, col("sim")).otherwise(
-              lit(1.0 - weight) * col("sim")
-                + lit(weight) * (col("fb_score") + lit(1.0)) / lit(2.0)))
+              graft.retrieval.Score.feedbackBlend(col("sim"), col("fb_score"), weight)))
       }
       val ranked = scored
         .withColumn("rnk", row_number().over(w))

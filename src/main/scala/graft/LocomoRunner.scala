@@ -55,13 +55,7 @@ object LocomoRunner {
     val topK = if (args.length > 1) args(1).toInt else 10
     val thresholds = if (args.length > 2) args(2).split(',').map(_.toDouble).toSeq
       else Seq(0.0, 0.2, 0.4, 0.6)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(defaultCpus = "8")
     val (provider: EmbeddingProvider, providerName) =
       sys.props.get("provider").orElse(sys.env.get("SPARK_GRAFT_PROVIDER")) match {
         case Some("w2v") =>

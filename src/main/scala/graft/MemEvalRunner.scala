@@ -21,13 +21,7 @@ object MemEvalRunner {
   def main(args: Array[String]): Unit = {
     val path = args(0)
     val k = if (args.length > 1) args(1).toInt else 5
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(defaultCpus = "8")
     // Provider selection (V9): -Dprovider=w2v (or SPARK_GRAFT_PROVIDER)
     // trains the MLlib Word2Vec provider on the haystack corpus before
     // the sweep; default stays the deterministic hash embedder.

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: dump formatted plans for headline queries.
   *
   * By default prints the INITIAL plan (`explain("formatted")` — what
@@ -11,15 +9,12 @@ import org.apache.spark.sql.SparkSession
   * only place runtime-only effects like AQE ReuseExchange /
   * AQEShuffleRead coalescing are visible. `SPARK_GRAFT_SF_DIR`
   * overrides the data dir (default sf0.01, where plan SHAPE matches
-  * the driver's correctness gate).
+  * the correctness gate). The session comes from [[LocalSession]], as
+  * [[Bench]]'s does, so the plans printed are the plans the bench runs.
   */
 object PlanAudit {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession("ERROR")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val exec = args.headOption.contains("--exec")
     val names = if (exec) args.drop(1) else args

@@ -29,13 +29,7 @@ object TaskDepRunner {
   def main(args: Array[String]): Unit = {
     val shapes = if (args.nonEmpty) args(0).split(',').toSeq else DefaultShapes
     val sizes = if (args.length > 1) args(1).split(',').map(_.toInt).toSeq else DefaultSizes
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(defaultCpus = "8")
     val results = for (shape <- shapes; size <- sizes)
       yield runShape(spark, shape, size)
     val cyclicRejected =

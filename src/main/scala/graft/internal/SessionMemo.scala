@@ -32,11 +32,12 @@ import org.apache.spark.sql.SparkSession
   *    as `pair_guard_census`) instead of silently folding it into
   *    whichever query happened to run first.
   *
-  * The opt-out conf (`confKey=false`) bypasses the memo entirely —
-  * every call rebuilds, unlabeled, inside the consuming query — which
-  * is what per-query standalone-cost benchmarking wants.
+  * One switch, `spark.graft.memo.enabled=false` ([[SessionMemo.EnabledConf]]),
+  * bypasses every memo — each call rebuilds, unlabeled, inside the
+  * consuming query — as standalone-cost benchmarking and the memo-off
+  * oracle run want.
   */
-private[graft] final class SessionMemo[V](confKey: String, opLabel: String) {
+private[graft] final class SessionMemo[V](opLabel: String) {
 
   private val cache =
     new java.util.WeakHashMap[SparkSession, ConcurrentHashMap[String, V]]()
@@ -162,8 +163,11 @@ private[graft] final class SessionMemo[V](confKey: String, opLabel: String) {
     java.lang.Long.toHexString(h)
   }
 
-  def getOrBuild(s: SparkSession, tablePath: String)(build: => V): V = {
-    if (!s.conf.get(confKey, "true").toBoolean) return build
+  /** The memoized value for the current state of `tablePath`. `variant`
+    * keys every other input the value depends on (e.g. a guard decision).
+    */
+  def getOrBuild(s: SparkSession, tablePath: String, variant: String = "")(build: => V): V = {
+    if (!SessionMemo.enabled(s)) return build
     val perSession = cache.synchronized {
       val it = cache.entrySet().iterator()
       while (it.hasNext) if (it.next().getKey.sparkContext.isStopped) it.remove()
@@ -171,12 +175,12 @@ private[graft] final class SessionMemo[V](confKey: String, opLabel: String) {
       if (m == null) { m = new ConcurrentHashMap[String, V](); cache.put(s, m) }
       m
     }
-    val key = tablePath + "#" + fingerprint(s, tablePath)
+    val key = tablePath + "#" + fingerprint(s, tablePath) + "#" + variant
     val hit = perSession.get(key)
     if (hit != null) return hit
-    // A changed fingerprint supersedes any prior entry for this path;
-    // drop the stale key before (re)building so the map stays one
-    // entry per live table state.
+    // A changed fingerprint or variant supersedes any prior entry for
+    // this path; drop the stale key before (re)building so the map
+    // stays one entry per path and its old frame can be freed.
     val stale = perSession.keys()
     while (stale.hasMoreElements) {
       val k = stale.nextElement()
@@ -188,6 +192,10 @@ private[graft] final class SessionMemo[V](confKey: String, opLabel: String) {
 }
 
 private[graft] object SessionMemo {
+  /** The one memo switch (default on). */
+  val EnabledConf = "spark.graft.memo.enabled"
+  def enabled(s: SparkSession): Boolean = s.conf.get(EnabledConf, "true").toBoolean
+
   /** Content-sample at most this many files from each end of the
     * path-sorted listing per fingerprint — the structural cap on the
     * fingerprint's I/O (≤ 2·SampleFiles opens regardless of part

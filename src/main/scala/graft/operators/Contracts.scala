@@ -2,7 +2,8 @@ package graft.operators
 
 import graft.Q
 import graft.io.Tables
-import graft.retrieval.{Modes, PostProcess}
+import graft.retrieval.{Modes, PostProcess, Score}
+import graft.storage.MemoryType
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -400,30 +401,33 @@ object Contracts {
       |ORDER BY event_id""".stripMargin
 
   // -------------------------------------------------------------------
-  // R3: per-type scoring rules + per-type top-k. Each memory type maps
-  // its own success/confidence rule into the shared 4-factor score
-  // (the Alma.retrieve branch rules), then a bounded window top-5 per
-  // type — the union-of-typed-branches retrieve shape as one plan.
+  // R3: per-type scoring rules + per-type top-k. Each event is cast as
+  // one memory type's row (the stored columns its rule reads), scored
+  // by that type's rule from [[graft.retrieval.Score]] — the facade's
+  // own rule table — then a bounded window top-5 per type: the
+  // union-of-typed-branches retrieve shape as one plan. One departure,
+  // pinned by the oracle SQL: the anti-pattern branch takes the row's
+  // confidence proxy, where the facade's anti-pattern rule is 1.0.
   private def perTypeScores(s: SparkSession, dir: String): DataFrame = {
     val e = Tables.events(s, dir)
-    val mtype = when(col("user_id") % 4 === 0, "heuristics")
-      .when(col("user_id") % 4 === 1, "outcomes")
-      .when(col("user_id") % 4 === 2, "knowledge")
-      .otherwise("anti_patterns")
-    val sc = (col("event_id") % 5).cast("double")
-    val occ = when(col("event_id") % 8 === 0, lit(1L)).otherwise(col("event_id") % 8)
-    val confBase = least(col("value") / 200.0, lit(1.0))
-    val succ = when(col("memory_type") === "heuristics", sc / occ.cast("double"))
-      .when(col("memory_type") === "outcomes",
-        when(col("event_id") % 2 === 0, 1.0).otherwise(0.3))
-      .when(col("memory_type") === "knowledge", lit(1.0))
-      .otherwise(least(occ.cast("double") / 10.0, lit(1.0)))
-    val conf = when(col("memory_type") === "outcomes", lit(1.0)).otherwise(confBase)
+    val mtype = when(col("user_id") % 4 === 0, MemoryType.Heuristics)
+      .when(col("user_id") % 4 === 1, MemoryType.Outcomes)
+      .when(col("user_id") % 4 === 2, MemoryType.Knowledge)
+      .otherwise(MemoryType.AntiPatterns)
+    val rows = e.select(col("event_id"), col("ts"), col("value"), mtype.as("memory_type"),
+      (col("event_id") % 5).as("successCount"),
+      when(col("event_id") % 8 === 0, lit(1L)).otherwise(col("event_id") % 8).as("occurrenceCount"),
+      (col("event_id") % 2 === 0).as("success"),
+      least(col("value") / 200.0, lit(1.0)).as("confidence"))
+    def byType(rule: Score.TypeRule => Column): Column =
+      coalesce(Score.Rules.map(r => when(col("memory_type") === r.memoryType, rule(r))): _*)
+    val conf = byType(r =>
+      if (r.memoryType == MemoryType.AntiPatterns) col("confidence") else r.confidence)
     val sim = least(col("value") / 200.0, lit(1.0))
-    val rec = Scoring.recency(col("ts"))
-    val scored = e.select(col("event_id"), col("ts"), col("value"), mtype.as("memory_type"))
+    val rec = Score.recency(col("ts"), Scoring.asOfUs)
+    val scored = rows
       .withColumn("score",
-        round(lit(0.4) * sim + lit(0.3) * rec + lit(0.2) * succ + lit(0.1) * conf, 6))
+        round(Score.composite(Score.DefaultWeights, sim, rec, byType(_.success), conf), 6))
     val w = Window.partitionBy("memory_type").orderBy(col("score").desc, col("event_id"))
     scored.withColumn("rk", row_number().over(w).cast("long"))
       .filter(col("rk") <= 5)

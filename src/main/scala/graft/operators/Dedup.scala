@@ -52,17 +52,15 @@ object Dedup {
     * table state the fingerprint keys on, so within a session the
     * first guard pays the job and the rest read a Long. Same
     * discipline as the sig cache ([[graft.internal.SessionMemo]]);
-    * `spark.graft.pair.censusCache=false` opts out (every guard then
+    * `spark.graft.memo.enabled=false` opts out (every guard then
     * re-prices, as before).
     */
   private val pairCensusCache =
-    new graft.internal.SessionMemo[java.lang.Long](
-      "spark.graft.pair.censusCache", "pair_guard_census")
+    new graft.internal.SessionMemo[java.lang.Long]("pair_guard_census")
 
-  private def cachedLshPairCensus(s: SparkSession, dir: String,
-      sigs: DataFrame): Long =
-    pairCensusCache.getOrBuild(s, s"$dir/documents.parquet")(
-      java.lang.Long.valueOf(lshPairCensus(sigs))).longValue()
+  private def cachedLshPairCensus(s: SparkSession, dir: String): Long =
+    pairCensusCache.getOrBuild(s, s"$dir/documents.parquet")(java.lang.Long.valueOf(
+      lshPairCensus(TextAnalysisShared.cachedDocSigs(s, dir)))).longValue()
 
   /** MinHash-LSH candidate pairs: 4 bands, signature = min md5 over
     * salted 3-token shingles. Docs collide only within a (band, sig)
@@ -91,7 +89,7 @@ object Dedup {
     // table ([[TextAnalysisShared.cachedDocSigs]]).
     val sigs = TextAnalysisShared.cachedDocSigs(s, dir)
     val exact = PairGuard.allowExact(s, "q_dedup_minhash_lsh")(
-      cachedLshPairCensus(s, dir, sigs))
+      cachedLshPairCensus(s, dir))
     val src = if (exact) sigs else sigs.join(familyReps(sigs), Seq("doc_id"))
     // First-match emission ([[TextAnalysisShared.firstMatchBand]]):
     // both join sides carry the doc's signature vector, bands_matched
@@ -309,8 +307,7 @@ object Dedup {
     * [[TextAnalysisShared.cachedDocSigs]].
     */
   private val sigSetCache =
-    new graft.internal.SessionMemo[DataFrame](
-      "spark.graft.sig.cache", "sigset_cache_build")
+    new graft.internal.SessionMemo[DataFrame]("sigset_cache_build")
 
   private def cachedSigSetPerDoc(s: SparkSession, dir: String): DataFrame =
     sigSetCache.getOrBuild(s, s"$dir/documents.parquet")(
@@ -694,27 +691,19 @@ object Dedup {
     * guard), and each paid the full formation + checkpoint per
     * invocation. The frame is bounded (≤ [[CtrPosPerAnchor]] rows per
     * anchor, two id columns). The guard decision (exact vs routed) is
-    * conf-dependent, so it is stored WITH the frame and a hit whose
-    * decision no longer matches the session's current guard verdict is
-    * rebuilt un-memoized — a mid-session mode/cap flip can never be
-    * served a stale shape. `spark.graft.pair.anchorCache=false` opts
-    * out (both queries then rebuild per invocation, as before).
+    * conf-dependent, so it is part of the memo key: a mid-session
+    * mode/cap flip misses, and the new frame replaces the old one in
+    * the memo. `spark.graft.memo.enabled=false` opts out (both queries
+    * then rebuild per invocation, as before).
     */
   private val anchorPairsCache =
-    new graft.internal.SessionMemo[(java.lang.Boolean, DataFrame)](
-      "spark.graft.pair.anchorCache", "anchor_pairs_build")
+    new graft.internal.SessionMemo[DataFrame]("anchor_pairs_build")
 
   private def cachedAnchorPairs(s: SparkSession, dir: String,
       query: String): DataFrame = {
-    val sigs = TextAnalysisShared.cachedDocSigs(s, dir)
-    val exact = PairGuard.allowExact(s, query)(cachedLshPairCensus(s, dir, sigs))
-    if (!s.conf.get("spark.graft.pair.anchorCache", "true").toBoolean)
-      return cappedAnchorPairs(sigs, exact).localCheckpoint(true)
-    val (cachedExact, df) = anchorPairsCache.getOrBuild(s, s"$dir/documents.parquet")(
-      (java.lang.Boolean.valueOf(exact),
-        cappedAnchorPairs(sigs, exact).localCheckpoint(true)))
-    if (cachedExact.booleanValue() == exact) df
-    else cappedAnchorPairs(sigs, exact).localCheckpoint(true)
+    val exact = PairGuard.allowExact(s, query)(cachedLshPairCensus(s, dir))
+    anchorPairsCache.getOrBuild(s, s"$dir/documents.parquet", if (exact) "exact" else "routed")(
+      cappedAnchorPairs(TextAnalysisShared.cachedDocSigs(s, dir), exact).localCheckpoint(true))
   }
 
   private def cappedAnchorPairs(sigs: DataFrame, exact: Boolean): DataFrame = {
@@ -1101,13 +1090,13 @@ private[graft] object TextAnalysisShared {
     * doc. Keyed on the table's file-listing fingerprint (a rewritten
     * `documents.parquet` misses naturally — see
     * [[graft.internal.SessionMemo]]); builds surface in op-metrics as
-    * `sig_cache_build`; `spark.graft.sig.cache=false` opts out. Only
+    * `sig_cache_build`; `spark.graft.memo.enabled=false` opts out. Only
     * the raw-table chain is memoized — callers signing a DERIVED frame
     * (pipeline stages, streaming batches) still call
     * [[bandedMinhashSigs]] directly.
     */
   private val sigCache =
-    new graft.internal.SessionMemo[DataFrame]("spark.graft.sig.cache", "sig_cache_build")
+    new graft.internal.SessionMemo[DataFrame]("sig_cache_build")
 
   def cachedDocSigs(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
     sigCache.getOrBuild(s, s"$dir/documents.parquet")(

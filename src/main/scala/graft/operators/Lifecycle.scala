@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.Q
 import graft.io.Tables
-import graft.functions.VectorFunctions
+import graft.functions.{DecayFunctions, VectorFunctions}
 import graft.sources.Ingestion
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -40,7 +40,6 @@ object Lifecycle {
   private def trustScoring(s: SparkSession, dir: String): DataFrame = {
     val e = Tables.events(s, dir)
     val n = (t: String) => sum(when(col("event_type") === t, 1L).otherwise(0L))
-    val asOfUs = unix_micros(to_timestamp(lit(Scoring.AsOf)))
     // Last-error watermark per user via an unordered whole-partition
     // window (no sort, no second shuffle): the clean streak is every
     // event strictly after it (all events when the user never errored).
@@ -53,12 +52,12 @@ object Lifecycle {
       .groupBy("user_id")
       .agg(n("purchase").as("n_p"), n("error").as("n_e"),
         n("click").as("n_c"), n("view").as("n_v"),
-        max(col("ts_us")).as("last_us"),
+        max(col("ts")).as("last_ts"),
         sum(when(col("last_err_us").isNull ||
           col("ts_us") > col("last_err_us"), 1L).otherwise(0L)).as("streak"))
       .select(col("user_id"), {
-        val days = (asOfUs - col("last_us")).cast("double") / lit(86400000000.0)
-        val decay = greatest(lit(0.5), exp(lit(-0.693) * days / lit(30.0)))
+        val days = DecayFunctions.ageDays(col("last_ts"), Scoring.asOfUs)
+        val decay = greatest(lit(0.5), DecayFunctions.exponentialDecay(days, 30.0))
         val bonus = least(lit(0.1), col("streak").cast("double") * lit(0.02))
         val t = trustRaw * decay + bonus
         val verified = when(pmod(col("user_id"), lit(2)) === 0, t * lit(1.1)).otherwise(t)
@@ -175,13 +174,12 @@ object Lifecycle {
     * diameter-many sequence of driver-blocking rounds, ~9-14 s each at
     * the ×100 decade, over the identical input. The labels are a pure
     * function of the sigs, so they follow the same memo discipline
-    * (shares the sig memo's conf — `spark.graft.sig.cache=false`
-    * disables the whole signature-derived family; builds labeled
-    * `cc_labels_build`). Callers labeling a DERIVED frame still call
-    * [[minhashCcLabelsFromSigs]] directly.
+    * (builds labeled `cc_labels_build`; `spark.graft.memo.enabled=false`
+    * disables it with every other memo). Callers labeling a DERIVED
+    * frame still call [[minhashCcLabelsFromSigs]] directly.
     */
   private val ccCache =
-    new graft.internal.SessionMemo[DataFrame]("spark.graft.sig.cache", "cc_labels_build")
+    new graft.internal.SessionMemo[DataFrame]("cc_labels_build")
 
   private[operators] def cachedCcLabels(s: SparkSession, dir: String): DataFrame =
     ccCache.getOrBuild(s, s"$dir/documents.parquet")(
@@ -536,13 +534,12 @@ object Lifecycle {
     * corpus scan. Same discipline as the sig/LM memos
     * ([[graft.internal.SessionMemo]]): file-listing fingerprint in the
     * key, build labeled `bpe_merges_build` in op-metrics, opt-out
-    * `spark.graft.bpe.mergeCache=false`. Only raw-table training is
+    * `spark.graft.memo.enabled=false`. Only raw-table training is
     * memoized — callers training on a DERIVED frame still call
     * [[graft.functions.Bpe.trainMergesFrom]] directly.
     */
   private val mergeCache =
-    new graft.internal.SessionMemo[Seq[(String, String)]](
-      "spark.graft.bpe.mergeCache", "bpe_merges_build")
+    new graft.internal.SessionMemo[Seq[(String, String)]]("bpe_merges_build")
 
   private[operators] def cachedRawMerges(s: SparkSession, dir: String): Seq[(String, String)] =
     mergeCache.getOrBuild(s, s"$dir/documents.parquet")(
@@ -747,7 +744,7 @@ object Lifecycle {
       .filter(col("value") < 5.0)
       .select(col("event_id"), col("user_id"), col("value"),
         lit("low_value").as("reason"),
-        unix_micros(to_timestamp(lit(Scoring.AsOf))).as("archived_at_us"))
+        Scoring.asOfUs.as("archived_at_us"))
       .orderBy("event_id")
 
   private val archiveSnapshotSql =

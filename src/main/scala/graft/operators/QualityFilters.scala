@@ -370,7 +370,7 @@ object QualityFilters {
   /** Session memo for the semantic-decontamination IVF codebook — the
     * [[graft.internal.SessionMemo]] discipline (mutation-fingerprinted
     * on the embeddings table, evicted with the session, build labeled
-    * `ivf_codebook_build`, `spark.graft.ivf.codebookCache=false` opts
+    * `ivf_codebook_build`, `spark.graft.memo.enabled=false` opts
     * out): training the coarse quantizer is a FULL-CORPUS assignment
     * pass (n·k kernel compares + the corpus count behind k), and a
     * pipeline probing the same corpus repeatedly must not retrain per
@@ -378,8 +378,7 @@ object QualityFilters {
     * probing DERIVED frames still train on what they pass.
     */
   private val ivfCodebookCache =
-    new graft.internal.SessionMemo[(Array[Long], Array[Array[Double]])](
-      "spark.graft.ivf.codebookCache", "ivf_codebook_build")
+    new graft.internal.SessionMemo[(Array[Long], Array[Array[Double]])]("ivf_codebook_build")
 
   private def cachedDecontCodebook(s: SparkSession, dir: String)
       : (Array[Long], Array[Array[Double]]) =

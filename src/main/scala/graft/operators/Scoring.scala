@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.Q
 import graft.io.Tables
+import graft.retrieval.Score
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -12,6 +13,7 @@ import org.apache.spark.sql.functions._
   *    half-life 30 days, injected as-of timestamp — never wall clock);
   *  - R1 4-factor composite score with normalized weights
   *    (scoring.py:15-37, 96-121; defaults 0.4/0.3/0.2/0.1);
+  *    both built from [[graft.retrieval.Score]], the facade's definition;
   *  - R4/F6 threshold + deterministic top-k (scoring.py:295-310);
   *  - R11 feedback aggregation `(used+up-ignored-down)/total`
   *    (alma/types.py:382-420) and R10 feedback-blended re-rank with
@@ -29,16 +31,13 @@ object Scoring {
   /** Injected "now" for all decay math (SURVEY §7.4: determinism). */
   val AsOf = "2024-03-01 00:00:00"
 
-  private[operators] def recency(ts: Column): Column = {
-    val asOfUs = unix_micros(to_timestamp(lit(AsOf)))
-    val days = (asOfUs - unix_micros(ts)).cast("double") / lit(86400000000.0)
-    pow(lit(0.5), days / lit(30.0))
-  }
+  /** [[AsOf]] as epoch micros. */
+  private[operators] def asOfUs: Column = unix_micros(to_timestamp(lit(AsOf)))
 
   // R2: pure recency decay per event.
   private def decayScores(s: SparkSession, dir: String): DataFrame =
     Tables.events(s, dir)
-      .select(col("event_id"), round(recency(col("ts")), 6).as("recency"))
+      .select(col("event_id"), round(Score.recency(col("ts"), asOfUs), 6).as("recency"))
       .orderBy("event_id")
 
   private val decaySql =
@@ -47,16 +46,16 @@ object Scoring {
       |  round(pow(0.5, ((epoch_us(TIMESTAMP '2024-03-01 00:00:00') - epoch_us(ts))::DOUBLE / 86400000000.0) / 30.0), 6) AS recency
       |FROM e ORDER BY event_id""".stripMargin
 
-  /** The unrounded 4-factor score over events (shared by the composite
-    * and re-rank queries). sim proxy: value scaled; success: per-type rule
-    * (purchase→1.0 else 0.3, the reference's outcome rule
-    * scoring.py:139-151); confidence: metadata k scaled.
+  /** The 4-factor score over events (shared by the composite and
+    * re-rank queries), built from [[Score]]: sim proxy: value scaled;
+    * success: the outcome rule over "purchase succeeded"
+    * (scoring.py:139-151); confidence: metadata k scaled.
     */
   private[operators] def scored(s: SparkSession, dir: String): DataFrame = {
-    val e = Tables.events(s, dir)
+    val e = Tables.events(s, dir).withColumn("success", col("event_type") === "purchase")
     val sim = least(col("value") / lit(200.0), lit(1.0))
-    val rec = recency(col("ts"))
-    val succ = when(col("event_type") === "purchase", lit(1.0)).otherwise(lit(0.3))
+    val rec = Score.recency(col("ts"), asOfUs)
+    val succ = Score.Outcomes.success
     val conf = least(get_json_object(col("props"), "$.k").cast("double") / lit(100.0), lit(1.0))
     e.select(
       col("event_id"), col("user_id"), col("event_type"),
@@ -64,7 +63,7 @@ object Scoring {
       round(rec, 6).as("recency"),
       round(succ, 6).as("success"),
       round(conf, 6).as("confidence"),
-      round(lit(0.4) * sim + lit(0.3) * rec + lit(0.2) * succ + lit(0.1) * conf, 6).as("score"))
+      round(Score.composite(Score.DefaultWeights, sim, rec, succ, conf), 6).as("score"))
   }
 
   private[operators] val scoredSql =
@@ -129,8 +128,7 @@ object Scoring {
     scored(s, dir)
       .join(broadcast(fb), Seq("user_id"), "left")
       .withColumn("final_score",
-        round(lit(0.85) * col("score")
-          + lit(0.15) * (coalesce(col("feedback_score"), lit(0.0)) + lit(1.0)) / lit(2.0), 6))
+        round(Score.feedbackBlend(col("score"), coalesce(col("feedback_score"), lit(0.0))), 6))
       .select("event_id", "user_id", "score", "feedback_score", "final_score")
       .orderBy(col("final_score").desc, col("event_id"))
       .limit(50)
@@ -284,7 +282,6 @@ object Scoring {
   // × access bonus × importance factor, plus the linear/step curves.
   private def memoryStrength(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.DecayFunctions._
-    val asOfUs = unix_micros(to_timestamp(lit(AsOf)))
     val days = ageDays(col("ts"), asOfUs)
     val access = get_json_object(col("props"), "$.k").cast("double")
     val importance = col("value") / lit(200.0)

@@ -22,6 +22,8 @@ final case class ModeConfig(
     failureBoost: Double = 1.0,
     exactMatchBoost: Double = 1.0) {
 
+  def weights: Score.Weights = Score.Weights(wSim, wRecency, wSuccess, wConfidence)
+
   /** Weights normalized to sum 1.0 (reference: scoring.py:28-37). */
   def normalized: ModeConfig = {
     val s = wSim + wRecency + wSuccess + wConfidence

@@ -87,7 +87,7 @@ class ObservabilitySpec extends SparkSpec {
     // (session, dir)'s estimate from an earlier spec — a hit runs no
     // job, so nothing would surface. Attribution is a property of the
     // census JOB; force it to run by opting out of the memo here.
-    spark.conf.set("spark.graft.pair.censusCache", "false")
+    spark.conf.set(graft.internal.SessionMemo.EnabledConf, "false")
     try {
       graft.SparkEntry.queries("q_dedup_minhash_lsh")(spark, Sf).collect()
       awaitRecords(sink, "pair_guard_census", 1)
@@ -95,7 +95,7 @@ class ObservabilitySpec extends SparkSpec {
       assert(rec.nonEmpty, "guard census must appear under its own op label")
       assert(rec.get.status == "ok")
     } finally {
-      spark.conf.unset("spark.graft.pair.censusCache")
+      spark.conf.unset(graft.internal.SessionMemo.EnabledConf)
       spark.listenerManager.unregister(sink)
     }
   }

@@ -18,20 +18,8 @@ class SessionMemoSpec extends SparkSpec {
     a.count() == b.count() && a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
 
   private def withCachesOff(body: => Unit): Unit = {
-    spark.conf.set("spark.graft.sig.cache", "false")
-    spark.conf.set("spark.graft.lm.scoreCache", "false")
-    spark.conf.set("spark.graft.bpe.mergeCache", "false")
-    spark.conf.set("spark.graft.ivf.codebookCache", "false")
-    spark.conf.set("spark.graft.pair.censusCache", "false")
-    spark.conf.set("spark.graft.pair.anchorCache", "false")
-    try body finally {
-      spark.conf.unset("spark.graft.sig.cache")
-      spark.conf.unset("spark.graft.lm.scoreCache")
-      spark.conf.unset("spark.graft.bpe.mergeCache")
-      spark.conf.unset("spark.graft.ivf.codebookCache")
-      spark.conf.unset("spark.graft.pair.censusCache")
-      spark.conf.unset("spark.graft.pair.anchorCache")
-    }
+    spark.conf.set(graft.internal.SessionMemo.EnabledConf, "false")
+    try body finally spark.conf.unset(graft.internal.SessionMemo.EnabledConf)
   }
 
   test("the CC-labels memo is output-invariant (q_dedup_canonical cached == uncached)") {
@@ -70,20 +58,45 @@ class SessionMemoSpec extends SparkSpec {
   }
 
   test("a mid-session guard flip is never served the other decision's anchor frame") {
-    // With the anchor memo ON, a stored exact-mode frame must NOT be
-    // returned once the session's guard verdict flips to routed (and
-    // vice versa) — the decision is stored with the frame and a
-    // mismatch rebuilds un-memoized.
-    // Populate the memo with the exact-mode frame first.
-    SparkEntry.queries("q_hard_negatives")(spark, Sf).localCheckpoint(true): Unit
-    spark.conf.set("spark.graft.pair.guard.maxPairs", "0") // force route
+    // The guard verdict is part of the anchor memo's key: the first call
+    // after a flip builds the other decision's frame (replacing the
+    // entry), the next one is served from it, and its output equals
+    // the memo-off output. A fresh dir makes the build count exact.
+    val dir = java.nio.file.Files.createTempDirectory("memoflip").toString
+    graft.io.Tables.documents(spark, Sf).write.parquet(s"$dir/documents.parquet")
+    graft.io.Tables.embeddings(spark, Sf).write.parquet(s"$dir/embeddings.parquet")
+    def hardNegatives() =
+      SparkEntry.queries("q_hard_negatives")(spark, dir).collect().map(_.toString).sorted.toSeq
+    val sink = new MetricsSink
+    spark.listenerManager.register(sink)
+    var barriers = 0
+    // Listener events arrive in order: once a labeled marker query is
+    // recorded, every earlier build has been too.
+    def anchorBuilds(): Int = {
+      barriers += 1
+      val marker = s"memo_flip_barrier_$barriers"
+      graft.observability.Metrics.withOp(spark, marker)(spark.range(1).collect(): Unit)
+      val deadline = System.nanoTime() + 10000000000L
+      while (!sink.snapshot().exists(_.op == marker) && System.nanoTime() < deadline) Thread.sleep(20)
+      val n = sink.snapshot().count(_.op == "anchor_pairs_build")
+      sink.clear()
+      n
+    }
     try {
-      val routedCachedOn = SparkEntry.queries("q_hard_negatives")(spark, Sf).localCheckpoint(true)
-      withCachesOff {
-        assert(canonEq(routedCachedOn, SparkEntry.queries("q_hard_negatives")(spark, Sf)),
-          "post-flip cached-on output must equal the uncached routed output")
-      }
-    } finally spark.conf.unset("spark.graft.pair.guard.maxPairs")
+      hardNegatives(): Unit
+      assert(anchorBuilds() == 1, "a fresh dir must build the exact-mode frame once")
+      spark.conf.set(PairGuard.MaxPairsConf, "0") // force route
+      try {
+        val first = hardNegatives()
+        assert(anchorBuilds() == 1, "the first call after the flip builds the routed frame")
+        val second = hardNegatives()
+        assert(anchorBuilds() == 0, "the second call after the flip must hit the memo")
+        assert(first == second)
+        withCachesOff {
+          assert(second == hardNegatives(), "post-flip output must equal the memo-off output")
+        }
+      } finally spark.conf.unset(PairGuard.MaxPairsConf)
+    } finally spark.listenerManager.unregister(sink)
   }
 
   test("rewriting the table under a fixed path invalidates the memos (cache stays ON)") {
@@ -128,7 +141,7 @@ class SessionMemoSpec extends SparkSpec {
     val v1 = Array.tabulate[Byte](256)(_.toByte)
     val v2 = v1.clone(); v2(250) = (v2(250) ^ 0x7f).toByte // tail sample range
     val v3 = v1.clone(); v3(3) = (v3(3) ^ 0x7f).toByte     // head sample range
-    val memo = new graft.internal.SessionMemo[String]("spark.graft.test.swapMemo", "swap_memo_build")
+    val memo = new graft.internal.SessionMemo[String]("swap_memo_build")
     var builds = 0
     def get(): String = memo.getOrBuild(spark, dir.toString) { builds += 1; s"build$builds" }
     write(v1)
@@ -157,8 +170,7 @@ class SessionMemoSpec extends SparkSpec {
       assert(f.setLastModified(mtime))
     }
     (0 until n).foreach(i => write(i, Array.tabulate[Byte](128)(b => (b + i).toByte)))
-    val memo = new graft.internal.SessionMemo[String](
-      "spark.graft.test.boundMemo", "bound_memo_build")
+    val memo = new graft.internal.SessionMemo[String]("bound_memo_build")
     var builds = 0
     def get(): String = memo.getOrBuild(spark, dir.toString) { builds += 1; s"build$builds" }
     assert(get() == "build1" && get() == "build1", "unchanged table must hit")
@@ -208,8 +220,7 @@ class SessionMemoSpec extends SparkSpec {
       assert(f.setLastModified(1700000000000L))
     }
     (0 until n).foreach(i => write(i, 100 + i))
-    val memo = new graft.internal.SessionMemo[String](
-      "spark.graft.test.swapDirsMemo", "swap_dirs_memo_build")
+    val memo = new graft.internal.SessionMemo[String]("swap_dirs_memo_build")
     var builds = 0
     def get(): String = memo.getOrBuild(spark, dir.toString) { builds += 1; s"build$builds" }
     assert(get() == "build1" && get() == "build1", "unchanged table must hit")
@@ -253,8 +264,7 @@ class SessionMemoSpec extends SparkSpec {
     val bPath = dir.resolve("BB").resolve("part-00000.bin").toString
     assert(aPath.hashCode == bPath.hashCode,
       "test premise: the two full paths must hashCode-collide")
-    val memo = new graft.internal.SessionMemo[String](
-      "spark.graft.test.hashCollMemo", "hash_coll_memo_build")
+    val memo = new graft.internal.SessionMemo[String]("hash_coll_memo_build")
     var builds = 0
     def get(): String = memo.getOrBuild(spark, dir.toString) { builds += 1; s"build$builds" }
     assert(get() == "build1" && get() == "build1", "unchanged table must hit")
@@ -281,8 +291,7 @@ class SessionMemoSpec extends SparkSpec {
       assert(f.setLastModified(1700000000000L))
     }
     (0 until n).foreach(write)
-    val memo = new graft.internal.SessionMemo[String](
-      "spark.graft.test.renameOnlyMemo", "rename_only_memo_build")
+    val memo = new graft.internal.SessionMemo[String]("rename_only_memo_build")
     var builds = 0
     def get(): String = memo.getOrBuild(spark, dir.toString) { builds += 1; s"build$builds" }
     assert(get() == "build1" && get() == "build1", "unchanged table must hit")

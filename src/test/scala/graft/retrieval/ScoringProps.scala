@@ -22,22 +22,36 @@ object ScoringProps extends Properties("scoring") {
       math.abs(m.wSim / m.wRecency - a / b) < 1e-6
     }
 
-  private def decay(days: Double, halfLife: Double = 30.0): Double =
-    math.pow(0.5, days / halfLife)
+  private val DayUs = 86400000000L
+  private val AsOfUs = 1709251200000000L // 2024-03-01 00:00:00 UTC
+
+  /** The shipped [[Score.recency]] column, evaluated at ages given in
+    * µs (a local relation: the driver evaluates it, no job runs).
+    */
+  private def decay(agesUs: Long*): Seq[Double] = {
+    val s = graft.SparkSpec.session
+    import s.implicits._
+    import org.apache.spark.sql.functions.{col, lit, timestamp_micros}
+    agesUs.map(AsOfUs - _).toDF("us")
+      .select(Score.recency(timestamp_micros(col("us")), lit(AsOfUs)))
+      .collect().map(_.getDouble(0)).toSeq
+  }
 
   property("recency decay is monotonically decreasing in age") =
-    Prop.forAll(Gen.choose(0.0, 365.0), Gen.choose(0.1, 365.0)) { (d, delta) =>
-      decay(d + delta) < decay(d)
+    Prop.forAll(Gen.choose(0L, 365 * DayUs), Gen.choose(DayUs / 10, 365 * DayUs)) { (d, delta) =>
+      val Seq(younger, older) = decay(d, d + delta)
+      older < younger
     }
 
   property("recency decay halves at the half-life") =
-    Prop.forAll(Gen.choose(0.0, 365.0)) { d =>
-      math.abs(decay(d + 30.0) - decay(d) / 2.0) < 1e-12
+    Prop.forAll(Gen.choose(0L, 365 * DayUs)) { d =>
+      val Seq(now, later) = decay(d, d + 30 * DayUs)
+      math.abs(later - now / 2.0) < 1e-12
     }
 
   property("decay stays in (0, 1] for non-negative age") =
-    Prop.forAll(Gen.choose(0.0, 10000.0)) { d =>
-      val v = decay(d); v > 0.0 && v <= 1.0
+    Prop.forAll(Gen.choose(0L, 10000 * DayUs)) { d =>
+      val Seq(v) = decay(d); v > 0.0 && v <= 1.0
     }
 
   private val candGen: Gen[PostProcess.Candidate] = for {
